@@ -77,7 +77,9 @@ def entry(spark: SparkSession) -> DataFrame:
     from yckg_spark.sources.web_pages import parse_records
 
     pages = _synthesize_pages(spark, "/root/testdata/sf0.001")
-    records = parse_records(pages, use_extraction=True)
+    # no stage cut: the caller consumes the lazy frame after this returns,
+    # so a persisted cut could never be released
+    records = parse_records(pages, use_extraction=True, cache=False)
     triples, _errors = emit_all(records)
     return dedup_triples(triples)
 
@@ -1478,14 +1480,19 @@ FROM c
 """
 
 
-def q_kg_build(spark, sf_dir):
-    """Full KG pipeline over pages synthesized from this sf_dir."""
+def q_kg_build(spark, sf_dir, persisted_out=None):
+    """Full KG pipeline over pages synthesized from this sf_dir. The
+    extraction stage cut is persisted only when the caller passes a
+    ``persisted_out`` list to release it from once the frame is consumed."""
     from yckg_spark.operators.canonicalize import dedup_triples
     from yckg_spark.operators.emit import emit_all
     from yckg_spark.sources.web_pages import parse_records
 
     pages = _synthesize_pages(spark, sf_dir)
-    triples, _ = emit_all(parse_records(pages, use_extraction=True))
+    records = parse_records(
+        pages, use_extraction=True, cache=persisted_out is not None, persisted_out=persisted_out
+    )
+    triples, _ = emit_all(records)
     return dedup_triples(triples)
 
 

@@ -78,3 +78,57 @@ def test_emission_deterministic_across_parallelism(spark, smoke_fixture_dir):
         return {tuple(r) for r in t.collect()}
 
     assert run(2) == run(13)
+
+
+def test_checkin_counts_per_page_when_page_repeats(spark):
+    """The same checkin page crawled at two URLs: the reference's Counter
+    runs over ONE record's date list, so each copy counts 1 and 2, never
+    the 2 and 4 of a global per-(business, date) count."""
+    from datetime import datetime
+
+    from yckg_spark import schemas
+
+    rec = {
+        "business_id": "B1",
+        "date": "2016-01-01 10:00:00, 2016-01-02 11:00:00, 2016-01-02 11:00:00",
+    }
+    pairs = [("https://example.org/checkin/a", rec), ("https://example.org/checkin/b", rec)]
+    pages = spark.createDataFrame(
+        [(url, datetime(2021, 1, 1), None, json.dumps(r), "en") for url, r in pairs],
+        schemas.WEB_PAGES,
+    )
+    triples, errors = emit_all(parse_records(pages, use_extraction=False))
+    got = {
+        (r["subject"], r["predicate"], r["object"], r["is_literal"], r["datatype"])
+        for r in triples.collect()
+    }
+    want, _ = oracle.golden_from_pages(
+        [{"url": u, "text": json.dumps(r), "lang": "en"} for u, r in pairs]
+    )
+    assert got == want
+    counts = sorted(o for _s, p, o, _l, _d in got if p.endswith("interactionStatistic"))
+    assert counts == ["1", "2"]
+    assert errors.count() == 0
+
+
+def test_emit_all_plan_construction_round_trips(spark, smoke_fixture_dir):
+    """Building the emission plan is a few SQL strings per domain: at most
+    1,000 py4j round trips for all five domains (one Column-built scalar
+    entry alone used to take ~280)."""
+    from py4j.java_gateway import GatewayClient
+
+    pages = read_web_pages(spark, f"{smoke_fixture_dir}/web_pages.parquet")
+    records = parse_records(pages, use_extraction=False, cache=False)
+    calls = [0]
+    send = GatewayClient.send_command
+
+    def counting(self, *args, **kwargs):
+        calls[0] += 1
+        return send(self, *args, **kwargs)
+
+    GatewayClient.send_command = counting
+    try:
+        emit_all(records)
+    finally:
+        GatewayClient.send_command = send
+    assert 0 < calls[0] <= 1000, calls[0]

@@ -115,6 +115,16 @@ class TestSanitize:
     def test_examples(self, raw, clean):
         assert sanitize_iri_py(raw) == clean
 
+    def test_spark_sql_matches_python(self, spark):
+        from pyspark.sql import functions as F
+
+        from yckg_spark.functions.strings import sanitize_iri
+
+        raws = ["Beauty & Spas", "Children's Clothing", "Books (New)", "a\\b"]
+        df = spark.createDataFrame([(r,) for r in raws], ["v"])
+        got = [r[0] for r in df.select(F.expr(sanitize_iri("v"))).collect()]
+        assert got == [sanitize_iri_py(r) for r in raws]
+
 
 class TestSkolem:
     def test_deterministic(self):
@@ -128,6 +138,15 @@ class TestSkolem:
         # separator prevents concat ambiguity
         assert skolem_iri_py("ab", "c") != skolem_iri_py("a", "bc")
 
+    def test_spark_sql_matches_python(self, spark):
+        from pyspark.sql import functions as F
+
+        from yckg_spark.functions.skolem import skolem_iri
+
+        df = spark.createDataFrame([("s1", "Ambience"), ("s2", None)], "a string, b string")
+        got = [r[0] for r in df.select(F.expr(skolem_iri("'checkin'", "a", "b"))).collect()]
+        assert got == [skolem_iri_py("checkin", "s1", "Ambience"), skolem_iri_py("checkin", "s2", None)]
+
 
 class TestDatatypeInference:
     """F5 — isdigit before float before string (schema_functions.py:59-65)."""
@@ -139,7 +158,7 @@ class TestDatatypeInference:
 
         rows = [("007",), ("3.5",), ("1,5",), ("no",), ("2015",), ("-3",), ("4e2",)]
         df = spark.createDataFrame(rows, ["v"]).select(
-            "v", inferred_datatype(F.col("v")).alias("dt")
+            "v", F.expr(inferred_datatype("v")).alias("dt")
         )
         got = {r["v"]: r["dt"] for r in df.collect()}
         assert got["007"] == XSD_INTEGER  # isdigit first
@@ -172,7 +191,7 @@ class TestPseudoJsonRepair:
             )
 
         df = spark.createDataFrame([(s,) for s in samples], ["v"]).select(
-            repair_pseudo_json(F.col("v")).alias("r")
+            F.expr(repair_pseudo_json("v")).alias("r")
         )
         got = [r["r"] for r in df.collect()]
         assert got == [py_chain(s) for s in samples]

@@ -306,3 +306,32 @@ def test_nt_roundtrip_with_hostile_literals(spark, tmp_path):
     }
     assert got == want
     assert back.columns == df.columns  # full triples shape restored
+
+
+def test_parse_records_persists_only_the_classified_frame(spark, pages):
+    persisted = []
+    records = parse_records(pages, use_extraction=False, persisted_out=persisted)
+    try:
+        assert len(persisted) == 1
+        assert "domain" in persisted[0].columns
+        assert set(records) == {"business", "user", "review", "tip", "checkin"}
+    finally:
+        for df in persisted:
+            df.unpersist()
+
+
+def test_run_resumable_releases_its_persists(spark, pages, tmp_path):
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet().toArray())
+    run_resumable(spark, pages, str(tmp_path / "kg"), n_buckets=2, use_extraction=False)
+    assert set(jsc.getPersistentRDDs().keySet().toArray()) == before
+
+
+def test_repeat_build_compiles_no_new_codegen_classes(spark, pages, tmp_path):
+    """A build's plan fits Spark's codegen cache: a second identical build
+    in the same session reuses every generated class."""
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    run_resumable(spark, pages, str(tmp_path / "kg_a"), n_buckets=1, use_extraction=False)
+    n0 = compiles.getCount()
+    run_resumable(spark, pages, str(tmp_path / "kg_b"), n_buckets=1, use_extraction=False)
+    assert compiles.getCount() - n0 == 0

@@ -71,6 +71,73 @@ def test_no_cartesian_in_kg_build(spark, pages):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
+def test_dedup_plans_hash_aggregate_with_min_rows(spark, pages):
+    """source_domain is min()-ed as an int rank: the dedup plans as a
+    HashAggregate (min over a string buffer would be a SortAggregate) and
+    its rows equal a plain string min() — including a triple several
+    domains emit, and a null domain."""
+    from pyspark.sql import functions as F
+
+    from yckg_spark.operators.canonicalize import DEDUP_KEY, dedup_triples
+    from yckg_spark.operators.emit import emit_all
+    from yckg_spark.sources.web_pages import parse_records
+
+    t, _ = emit_all(parse_records(pages, use_extraction=False, cache=False))
+    extra = spark.createDataFrame(
+        [
+            ("s", "p", "o", False, None, "user"),
+            ("s", "p", "o", False, None, "checkin"),
+            ("s", "p", "o", False, None, None),
+            ("s2", "p", "o", True, "dt", "tip"),
+            ("s2", "p", "o", True, "dt", "review"),
+            ("s3", "p", "o", True, None, None),
+        ],
+        "subject string, predicate string, object string, is_literal boolean,"
+        " datatype string, source_domain string",
+    )
+    t = t.unionByName(extra)
+    out = dedup_triples(t)
+    plan = _plan(out)
+    assert "HashAggregate" in plan and "SortAggregate" not in plan, plan
+    want = t.groupBy(*DEDUP_KEY).agg(F.min("source_domain").alias("source_domain"))
+    assert out.columns == want.columns
+    assert {tuple(r) for r in out.collect()} == {tuple(r) for r in want.collect()}
+
+
+def test_dedup_rejects_unknown_source_domain(spark):
+    from yckg_spark.operators.canonicalize import dedup_triples
+
+    df = spark.createDataFrame(
+        [("s", "p", "o", False, None, "nowhere")],
+        "subject string, predicate string, object string, is_literal boolean,"
+        " datatype string, source_domain string",
+    )
+    with pytest.raises(Exception, match="unknown source_domain"):
+        dedup_triples(df).collect()
+
+
+def test_query_path_dedup_plan_is_plain_min(spark, tmp_path):
+    """A store read with no source_domain (only the int bucket column
+    outside the key) keeps the plain groupBy + min() plan."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    from yckg_spark.operators.canonicalize import DEDUP_KEY, dedup_triples
+
+    df = spark.createDataFrame(
+        [("s", "p", "o", False, None, 0)],
+        "subject string, predicate string, object string, is_literal boolean,"
+        " datatype string, bucket int",
+    )
+    plain = df.groupBy(*DEDUP_KEY).agg(F.min("bucket").alias("bucket"))
+
+    def shape(d):
+        return re.sub(r"#\d+L?", "", d._jdf.queryExecution().optimizedPlan().toString())
+
+    assert shape(dedup_triples(df)) == shape(plain)
+
+
 def test_salted_agg_is_two_phase(spark, pages):
     """The skew-handling aggregate must show two exchange-separated
     aggregation rounds (salt phase + merge phase)."""

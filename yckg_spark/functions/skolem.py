@@ -14,22 +14,18 @@ same rule (SURVEY §7 known-hard #1).
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
+from yckg_spark.functions.strings import sql_str
 from yckg_spark.namespaces import YELPENT
 
 SKOLEM_ROOT = YELPENT + "bnode/"
 _SEP = "\x1f"  # unit separator — cannot occur in the payload fields
 
 
-def skolem_iri(*parts: Column | str) -> Column:
-    """Content-hash skolem IRI from the given columns/constants."""
-    cols = [p if isinstance(p, Column) else F.lit(p) for p in parts]
-    return F.concat(
-        F.lit(SKOLEM_ROOT),
-        F.sha2(F.concat_ws(_SEP, *[F.coalesce(c.cast("string"), F.lit("")) for c in cols]), 256),
-    )
+def skolem_iri(*parts: str) -> str:
+    """Spark SQL for the content-hash skolem IRI of the given SQL
+    expressions (columns or quoted constants)."""
+    fields = ", ".join(f"coalesce(CAST({p} AS STRING), '')" for p in parts)
+    return f"concat({sql_str(SKOLEM_ROOT)}, sha2(concat_ws(chr({ord(_SEP)}), {fields}), 256))"
 
 
 def skolem_iri_py(*parts: str) -> str:

@@ -1,7 +1,9 @@
-"""Scalar string / datatype Column expressions (SURVEY §2.9, F1-F10).
+"""Scalar string / datatype expressions (SURVEY §2.9, F1-F10).
 
-Everything here is a native Column expression — JVM-side, inside whole-stage
-codegen. No Python UDFs.
+The emission helpers render Spark SQL text: each takes the SQL of its input
+expression and returns the SQL of the result, so a whole domain's triple
+array is one parsed expression instead of hundreds of Column objects built
+over py4j. Everything runs JVM-side. No Python UDFs.
 """
 
 from __future__ import annotations
@@ -9,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from yckg_spark.namespaces import XSD_DECIMAL, XSD_INTEGER, XSD_STRING
+from yckg_spark.namespaces import XSD_BOOLEAN, XSD_DECIMAL, XSD_INTEGER, XSD_STRING
 
 # Characters the reference rewrites to "_" when a category name becomes an
 # IRI tail (create_yelp_nt_files.py:93: ' ', '&', '/', "'", '-', '(', ')').
@@ -17,13 +19,18 @@ _IRI_BAD = " &/'-()"
 _IRI_SUB = "_" * len(_IRI_BAD)
 
 
-def sanitize_iri(col: Column) -> Column:
+def sql_str(s: str) -> str:
+    """A Python string as a Spark SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def sanitize_iri(x: str) -> str:
     """F1 — byte-exact re-realization of the category sanitize chain.
 
     ``translate`` is character-by-character substitution, equivalent to the
     reference's chained single-char ``str.replace`` calls.
     """
-    return F.translate(col, _IRI_BAD, _IRI_SUB)
+    return f"translate({x}, {sql_str(_IRI_BAD)}, {sql_str(_IRI_SUB)})"
 
 
 def sanitize_iri_py(s: str) -> str:
@@ -31,84 +38,58 @@ def sanitize_iri_py(s: str) -> str:
     return s.translate(str.maketrans(_IRI_BAD, _IRI_SUB))
 
 
-def repair_pseudo_json(col: Column) -> Column:
+def repair_pseudo_json(x: str) -> str:
     """F2 — the reference's pseudo-JSON repair chain, same order, same
     (buggy) literal-substring semantics (create_yelp_nt_files.py:118):
     ' -> ", None -> null, u" -> ", True -> true, False -> false.
 
     The chain corrupts values containing apostrophes or the words True/None —
     we reproduce that corruption on purpose; triple identity must match.
-    Literal (non-regex) replacement via regexp_replace with quoted patterns.
     """
-    c = F.regexp_replace(col, r"'", '"')
-    c = F.regexp_replace(c, r"None", "null")
-    c = F.regexp_replace(c, r'u"', '"')
-    c = F.regexp_replace(c, r"True", "true")
-    c = F.regexp_replace(c, r"False", "false")
-    return c
+    for old, new in [("'", '"'), ("None", "null"), ('u"', '"'), ("True", "true"), ("False", "false")]:
+        x = f"replace({x}, {sql_str(old)}, {sql_str(new)})"
+    return x
 
 
-def normalize_datetime(col: Column) -> Column:
+def normalize_datetime(x: str) -> str:
     """F3 — '"YYYY-MM-DD hh:mm:ss" -> "...T..."' (space→T, first occurrence
     is the only one in well-formed values; the reference replaces all).
     """
-    return F.regexp_replace(col, " ", "T")
+    return f"replace({x}, ' ', 'T')"
 
 
-def is_integer_string(col: Column) -> Column:
-    """str.isdigit() equivalent for ASCII content (schema_functions.py:60)."""
-    return col.rlike(r"^[0-9]+$")
-
-
-def is_float_string(col: Column) -> Column:
-    """string_is_float (string_functions.py:4-14): float(s) succeeds.
-
-    Spark's cast-to-double accepts the same lexical space for ordinary
-    numerics (leading/trailing blanks, signs, exponents, Infinity/NaN).
-    try_cast, not cast: ANSI mode (Spark 4 default) makes a plain cast throw.
-    """
-    return col.try_cast("double").isNotNull()
-
-
-def inferred_datatype(col: Column) -> Column:
+def inferred_datatype(x: str) -> str:
     """F5 — datatype inference for *string* values, preserving the
     reference's check order: isdigit → integer, float-parsable → decimal,
     else string (schema_functions.py:59-65). '007' → integer, '3.5' →
     decimal, '1,5' → string.
+
+    ``RLIKE '^[0-9]+$'`` is str.isdigit() for ASCII content; float(s)
+    succeeding is ``try_cast(... AS DOUBLE)`` being non-null — Spark's
+    cast accepts the same lexical space for ordinary numerics, and try_cast
+    does not throw under ANSI mode (the Spark 4 default).
     """
     return (
-        F.when(is_integer_string(col), F.lit(XSD_INTEGER))
-        .when(is_float_string(col), F.lit(XSD_DECIMAL))
-        .otherwise(F.lit(XSD_STRING))
+        f"CASE WHEN {x} RLIKE '^[0-9]+$' THEN {sql_str(XSD_INTEGER)}"
+        f" WHEN try_cast({x} AS DOUBLE) IS NOT NULL THEN {sql_str(XSD_DECIMAL)}"
+        f" ELSE {sql_str(XSD_STRING)} END"
     )
 
 
-def json_value_datatype(col: Column) -> Column:
+def json_value_datatype(x: str) -> str:
     """Datatype of a *parsed JSON* scalar as rdflib Literal() would type it
     (create_yelp_nt_files.py:134-137: Literal(sub_object) with no datatype →
     bool→xsd:boolean, int→xsd:integer, float→xsd:double... but in the nested
     attribute dicts only bool/str occur; str → plain literal, i.e. NULL
-    datatype). ``col`` holds the JSON lexical form from a map<string,string>
+    datatype). ``x`` holds the JSON lexical form from a map<string,string>
     parse: 'true'/'false' → boolean, pure digits → integer, else plain.
     """
-    from yckg_spark.namespaces import XSD_BOOLEAN
-
     return (
-        F.when(col.isin("true", "false"), F.lit(XSD_BOOLEAN))
-        .when(col.rlike(r"^-?[0-9]+$"), F.lit(XSD_INTEGER))
-        .otherwise(F.lit(None).cast("string"))
+        f"CASE WHEN {x} IN ('true', 'false') THEN {sql_str(XSD_BOOLEAN)}"
+        f" WHEN {x} RLIKE '^-?[0-9]+$' THEN {sql_str(XSD_INTEGER)} END"
     )
 
 
 def space_words_lower(col: Column) -> Column:
     """F7 — camelCase → spaced lowercase (string_functions.py:40-41)."""
     return F.lower(F.regexp_replace(col, r"(?<!^)([A-Z])([^A-Z])", r" $1$2"))
-
-
-def decimal_lexical(col: Column) -> Column:
-    """Lexical form of a double as Python repr() would print it, matching
-    rdflib's Literal(float) NT output for ordinary magnitudes: Java
-    Double.toString and Python repr agree on the shortest-roundtrip form for
-    values like 34.4266787 and 5.0.
-    """
-    return col.cast("string")

@@ -138,8 +138,21 @@ def run_resumable(
         # pattern — the Iceberg identity-partition(predicate) layout, nested
         # under the write side's bucket partitioning. Predicate cardinality
         # is small (~50 vocabulary IRIs), so this adds no small-file blowup.
-        triples.write.mode("overwrite").partitionBy("predicate").parquet(tdir)
-        errors.write.mode("overwrite").parquet(edir)
+        # Sorting each task's rows by (predicate, subject) satisfies the
+        # partitioned write's own sort and clusters each file by subject;
+        # in hash-aggregate output order the files come out ~1.4% larger.
+        try:
+            triples.sortWithinPartitions("predicate", "subject").write.mode(
+                "overwrite"
+            ).partitionBy("predicate").parquet(tdir)
+            errors.write.mode("overwrite").parquet(edir)
+        finally:
+            # drop exactly this bucket's stage cut (the classified frame),
+            # also when a write fails — a blanket clearCache() would also
+            # evict unrelated frames a shared session (tests, bench
+            # harness, callers) has persisted
+            for df in persisted:
+                df.unpersist()
         t_write = time.time() - t0
         n_triples = obs_triples.get["n"]
         n_errors = obs_errors.get["n"]
@@ -174,12 +187,6 @@ def run_resumable(
         )
         metrics_all.append(commit)
         commits += 1
-        # drop exactly this bucket's stage-cut blocks (classified + parsed
-        # domains) before the next bucket materializes its own — a blanket
-        # clearCache() would also evict unrelated frames a shared session
-        # (tests, bench harness, callers) has persisted
-        for df in persisted:
-            df.unpersist()
         if fail_after is not None and commits >= fail_after:
             raise RuntimeError(f"injected failure after {commits} commits")
     return {

@@ -27,6 +27,26 @@ DEFAULT_SALTS = 16
 
 DEDUP_KEY = ["subject", "predicate", "object", "is_literal", "datatype"]
 
+# every source_domain the program writes, sorted: min() over their ranks is
+# min() over the names (emit.ENTRIES, enrich_schema, enrich_wikidata)
+SOURCE_DOMAINS = (
+    "business",
+    "checkin",
+    "review",
+    "schema_mappings",
+    "tip",
+    "user",
+    "wiki_mappings",
+    "wikidata_locations",
+)
+_NAMES = [f"'{d}'" for d in SOURCE_DOMAINS]
+_RANK = (
+    "CASE WHEN source_domain IS NULL THEN NULL "
+    + " ".join(f"WHEN source_domain = {n} THEN {i}" for i, n in enumerate(_NAMES))
+    + " ELSE raise_error(concat('unknown source_domain: ', source_domain)) END"
+)
+_UNRANK = f"get(array({', '.join(_NAMES)}), source_domain)"
+
 
 def dedup_triples(triples: DataFrame) -> DataFrame:
     """Global set semantics over the emitted triple multiset.
@@ -35,14 +55,19 @@ def dedup_triples(triples: DataFrame) -> DataFrame:
     resolved with a deterministic min() instead of dropDuplicates'
     arbitrary survivor — two builds at different parallelism produce
     byte-identical stores even when the same triple is emitted by several
-    domains.
+    domains. ``source_domain`` is min()-ed as its rank in
+    ``SOURCE_DOMAINS``: an int buffer keeps the aggregate a
+    HashAggregate, where min() over a string plans a SortAggregate that
+    sorts the 5 string keys twice. A name outside the list fails the job.
     """
     extra = [c for c in triples.columns if c not in DEDUP_KEY]
     if not extra:
         return triples.dropDuplicates(DEDUP_KEY)
-    return triples.groupBy(*DEDUP_KEY).agg(
-        *[F.min(c).alias(c) for c in extra]
-    )
+    coded = "source_domain" in extra
+    if coded:
+        triples = triples.withColumn("source_domain", F.expr(_RANK))
+    out = triples.groupBy(*DEDUP_KEY).agg(*[F.min(c).alias(c) for c in extra])
+    return out.withColumn("source_domain", F.expr(_UNRANK)) if coded else out
 
 
 def _salt(df: DataFrame, n_salts: int) -> Column:

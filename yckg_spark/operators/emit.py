@@ -1,28 +1,42 @@
 """Triple emission: parsed record DataFrames → one columnar triples DataFrame.
 
 Re-realizes the reference's per-row rdflib Graph construction
-(Code/create_yelp_nt_files.py:21-305) as *pure Column expressions*: per
-domain, one projection builds an ``array<struct>`` of candidate triples which
-is exploded once — a single data pass per triple family, fully inside
-whole-stage codegen. Blank nodes become deterministic skolem IRIs
-(functions/skolem.py). The reference's none-value side channel
-(create_yelp_nt_files.py:112-114) becomes a second output DataFrame.
+(Code/create_yelp_nt_files.py:21-305). Each domain is ONE Generate:
+``inline(<entry array>)``, where the array holds a struct per candidate
+triple of the record. The array is Spark SQL text rendered from the mapping
+tables (functions/mappings.py): the fixed scalars, and the list- and
+map-valued families (categories, attributes, hours, friends, elite, review
+dates, checkin date counts) expanded in place with ``transform`` /
+``flatten`` / ``map_entries``. There is no union and no shuffle inside a
+domain, and building the plan is a few SQL strings per domain rather than
+thousands of Column objects made over py4j. Blank nodes become
+deterministic skolem IRIs (functions/skolem.py).
 
-Every emitter returns ``(triples, errors)`` with schemas
-``schemas.TRIPLES`` / ``schemas.ERRORS``.
+The reference's none-value side channel (create_yelp_nt_files.py:112-114)
+rides in the same array: an entry with a non-null ``kind`` ('none' for a
+sentinel value, 'error' for an unparseable nested attribute) carries the raw
+key/value and goes to the second output DataFrame.
+
+Each ``<domain>_entries`` returns the domain's entry rows; ``emit_all``
+unions them and splits them on ``kind`` into ``(triples, errors)`` with
+schemas ``schemas.TRIPLES`` / ``schemas.ERRORS``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from functools import reduce
+
+from pyspark.sql import DataFrame
+from pyspark.sql.types import DoubleType, LongType, StructType
 
 from yckg_spark import schemas
 from yckg_spark.functions.mappings import (
     NESTED_ATTRIBUTE_KEYS,
     NONE_SENTINELS,
     TYPE_MAP,
+    datatype_for,
     iri_root,
+    predicate_for,
 )
 from yckg_spark.functions.skolem import skolem_iri
 from yckg_spark.functions.strings import (
@@ -31,122 +45,81 @@ from yckg_spark.functions.strings import (
     normalize_datetime,
     repair_pseudo_json,
     sanitize_iri,
+    sql_str as q,
 )
 from yckg_spark.namespaces import (
     BUSINESS_URI,
     RDF_TYPE,
     SCHEMA,
     USER_URI,
-    XSD_ANYURI,
     XSD_DATETIME,
     XSD_DECIMAL,
     XSD_INTEGER,
-    XSD_STRING,
     YELPCAT,
-    YELPENT,
     YELPVOC,
 )
 
 TRIPLE_COLS = ["subject", "predicate", "object", "is_literal", "datatype", "source_domain"]
 ERROR_COLS = ["subject", "predicate", "object", "kind", "source_domain"]
 
-def _null_str() -> Column:
-    # built lazily — Column construction needs an active SparkContext
-    return F.lit(None).cast("string")
+_NULL = "CAST(NULL AS STRING)"
+# a typed field the reference dispatches by Python value type (int →
+# integer, float → decimal); string fields infer from the value instead
+_TYPE_DATATYPES = {LongType: XSD_INTEGER, DoubleType: XSD_DECIMAL}
 
 
-def _c(x: Column | str | None) -> Column:
-    if x is None:
-        return _null_str()
-    return x if isinstance(x, Column) else F.lit(x)
-
-
-def _entry(
-    pred: Column | str,
-    obj: Column | str | None,
-    *,
-    lit: bool,
-    dtype: Column | str | None = None,
-    valid: Column | bool = True,
-    raw_key: Column | str | None = None,
-    raw_val: Column | str | None = None,
-) -> Column:
-    """One candidate triple as a struct; ``valid=false`` rows are routed to
-    the errors side channel carrying the *raw* key/value (the reference logs
-    the unmapped key — create_yelp_nt_files.py:113)."""
-    return F.struct(
-        _c(pred).alias("predicate"),
-        _c(obj).cast("string").alias("object"),
-        F.lit(lit).alias("is_literal"),
-        _c(dtype).alias("datatype"),
-        (valid if isinstance(valid, Column) else F.lit(valid)).alias("valid"),
-        _c(raw_key).alias("raw_key"),
-        _c(raw_val).cast("string").alias("raw_val"),
-    )
-
-
-def _explode_entries(df: DataFrame, subject: Column, entries: list[Column], domain: str):
-    x = df.select(
-        subject.alias("subject"),
-        F.explode(F.array(*entries)).alias("t"),
-    ).select("subject", "t.*")
-    # routing-only entries carry a null predicate — never emitted as triples
-    triples = x.filter(F.col("valid") & F.col("predicate").isNotNull()).select(
-        "subject",
-        "predicate",
-        "object",
-        "is_literal",
-        "datatype",
-        F.lit(domain).alias("source_domain"),
-    )
-    errors = x.filter(~F.col("valid")).select(
-        "subject",
-        F.col("raw_key").alias("predicate"),
-        F.col("raw_val").alias("object"),
-        F.lit("none").alias("kind"),
-        F.lit(domain).alias("source_domain"),
-    )
-    return triples, errors
-
-
-def _is_sentinel(col: Column) -> Column:
-    return col.isNull() | col.isin(*NONE_SENTINELS)
-
-
-def _scalar(key: str, col: Column, pred: str, dtype: str, obj: Column | None = None) -> Column:
-    """A literal-valued scalar entry with none-sentinel routing."""
-    valid = ~_is_sentinel(col.cast("string"))
-    return _entry(
-        pred,
-        (obj if obj is not None else col.cast("string")),
-        lit=True,
-        dtype=dtype,
-        valid=valid,
-        raw_key=key,
-        raw_val=col.cast("string"),
-    )
-
-
-def _union_pairs(pairs):
-    triples = None
-    errors = None
-    for t, e in pairs:
-        triples = t if triples is None else triples.unionByName(t)
-        errors = e if errors is None else errors.unionByName(e)
-    return triples, errors
-
-
-def _empty_errors(spark_df: DataFrame, domain: str) -> DataFrame:
+def _entry(s: str, p: str, o: str, *, lit: bool, dtype: str = _NULL, kind: str = _NULL) -> str:
+    """One candidate triple (``kind`` null) or error row, as SQL."""
     return (
-        spark_df.select(
-            _null_str().alias("subject"),
-            _null_str().alias("predicate"),
-            _null_str().alias("object"),
-            F.lit("none").alias("kind"),
-            F.lit(domain).alias("source_domain"),
-        )
-        .limit(0)
+        f"named_struct('subject', {s}, 'predicate', {p}, 'object', {o},"
+        f" 'is_literal', {str(lit).lower()}, 'datatype', {dtype}, 'kind', {kind})"
     )
+
+
+def _iri(s: str, p: str, o: str) -> str:
+    return _entry(s, p, o, lit=False)
+
+
+def _error(key: str, raw: str = _NULL, kind: str = "none") -> str:
+    """An errors-side row of the record: the reference logs the *raw*
+    key/value (create_yelp_nt_files.py:113). ``key`` is SQL."""
+    return _entry("subject", key, raw, lit=True, kind=q(kind))
+
+
+def _is_sentinel(x: str) -> str:
+    return f"({x} IS NULL OR {x} IN ({', '.join(map(q, NONE_SENTINELS))}))"
+
+
+def _value(schema: StructType, key: str) -> tuple[str, str, str]:
+    """(predicate, object, datatype) SQL of a record field, from the mapping
+    tables: mapped keys take their predicate and datatype, the rest fall
+    back to ``yelpvoc:{key}`` typed from the field (get_schema_predicate,
+    schema_functions.py:12-76)."""
+    raw = f"CAST({key} AS STRING)"
+    dtype = datatype_for(key) or _TYPE_DATATYPES.get(type(schema[key].dataType))
+    obj = normalize_datetime(raw) if dtype == XSD_DATETIME else raw
+    return q(predicate_for(key)), obj, (q(dtype) if dtype else inferred_datatype(raw))
+
+
+def _scalars(schema: StructType, skip: set[str]) -> list[str]:
+    """A literal entry per remaining field, with none-sentinel routing."""
+    out = []
+    for key in schema.fieldNames():
+        if key in skip:
+            continue
+        pred, obj, dtype = _value(schema, key)
+        raw = f"CAST({key} AS STRING)"
+        out.append(
+            f"IF({_is_sentinel(raw)}, {_error(q(key), raw)},"
+            f" {_entry('subject', pred, obj, lit=True, dtype=dtype)})"
+        )
+    return out
+
+
+def _inline(df: DataFrame, domain: str, parts: list[str]) -> DataFrame:
+    """The domain's entry rows: one ``inline`` of the concatenated entry
+    arrays, plus ``source_domain``."""
+    return df.selectExpr(f"inline(concat({', '.join(parts)}))", f"{q(domain)} AS source_domain")
 
 
 # ---------------------------------------------------------------------------
@@ -154,223 +127,76 @@ def _empty_errors(spark_df: DataFrame, domain: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def business_triples(biz: DataFrame) -> tuple[DataFrame, DataFrame]:
-    subj = F.concat(F.lit(iri_root("business")), F.col("business_id"))
-
-    # Branch A — per-row fixed scalars (+ rdf:type, schema:url).
-    entries = [
-        _entry(RDF_TYPE, SCHEMA + "LocalBusiness", lit=False),
-        _entry(
-            SCHEMA + "url",
-            F.concat(F.lit(BUSINESS_URI), F.col("business_id")),
-            lit=False,
-        ),
-        _scalar("name", F.col("name"), SCHEMA + "legalName", XSD_STRING),
-        _scalar("address", F.col("address"), SCHEMA + "address", XSD_STRING),
-        _scalar("city", F.col("city"), YELPVOC + "locatedInCity", XSD_STRING),
-        _scalar("state", F.col("state"), YELPVOC + "locatedInState", XSD_STRING),
-        _scalar("postal_code", F.col("postal_code"), SCHEMA + "postalCode", XSD_STRING),
-        _scalar("latitude", F.col("latitude"), SCHEMA + "latitude", XSD_DECIMAL),
-        _scalar("longitude", F.col("longitude"), SCHEMA + "longitude", XSD_DECIMAL),
-        _scalar("stars", F.col("stars"), SCHEMA + "aggregateRating", XSD_DECIMAL),
-        _scalar("review_count", F.col("review_count"), SCHEMA + "reviewCount", XSD_INTEGER),
-        _scalar("is_open", F.col("is_open"), SCHEMA + "publicAccess", XSD_STRING),
-        # flatten_dictionary keeps a null attributes/hours value as a plain
-        # key → routed to the none list (dictionary_functions.py:11-16 +
-        # create_yelp_nt_files.py:112).
-        _entry(None, None, lit=True, valid=F.col("attributes").isNotNull(), raw_key="attributes"),
-        _entry(None, None, lit=True, valid=F.col("hours").isNotNull(), raw_key="hours"),
-        # a falsy categories value is NOT deleted by the reference (:86-89)
-        # and falls through to the none-sentinel routing
-        _entry(
-            None,
-            None,
-            lit=True,
-            valid=F.col("categories").isNotNull() & (F.col("categories") != ""),
-            raw_key="categories",
-            raw_val=F.col("categories"),
-        ),
+def business_entries(biz: DataFrame) -> DataFrame:
+    has = q(YELPVOC + "has")
+    fixed = [
+        _iri("subject", q(RDF_TYPE), q(TYPE_MAP["business"])),
+        _iri("subject", q(SCHEMA + "url"), f"concat({q(BUSINESS_URI)}, business_id)"),
+        *_scalars(schemas.BUSINESS, {"business_id", "attributes", "categories", "hours"}),
     ]
-    a = _explode_entries(biz, subj, entries, "business")
-
-    # Branch B+C — categories: split ", ", sanitize, keywords edge + a
-    # globally-deduplicated category-type triple (the reference's
-    # category_cache at :47,101-108 is first-seen; set-equivalent to a global
-    # dropDuplicates).
-    cats = (
-        biz.filter(F.col("categories").isNotNull() & (F.col("categories") != ""))
-        .select(
-            subj.alias("subject"),
-            F.explode(F.split(F.col("categories"), ", ")).alias("category"),
-        )
-        .select("subject", sanitize_iri(F.col("category")).alias("category"))
+    # categories: ", "-split, sanitized: a keywords edge plus the category's
+    # type triple. The reference's first-seen category_cache (:47,101-108)
+    # is set-equivalent to the build's global dedup of the repeats. A falsy
+    # value is NOT deleted by the reference (:86-89) and falls through to
+    # the none-sentinel routing.
+    categories = f"""IF(categories IS NULL OR categories = '',
+        array({_error("'categories'", "categories")}),
+        flatten(transform(
+            transform(split(categories, ', '), c -> concat({q(YELPCAT)}, {sanitize_iri("c")})),
+            cat -> array(
+                {_iri("subject", q(SCHEMA + "keywords"), "cat")},
+                {_iri("cat", q(RDF_TYPE), q(YELPVOC + "YelpCategory"))}))))"""
+    # nested pseudo-JSON attribute → skolem blank node subgraph
+    # (create_yelp_nt_files.py:116-137); the one-element transform binds
+    # the bnode and the parse once. A value the repair chain cannot save
+    # kills the whole record in the reference (exception at :183); we
+    # surface it instead. A JSON null sub-value → rdflib Literal(None),
+    # whose lexical form is "None".
+    type_map = ", ".join(f"{q(k)}, {q(TYPE_MAP[k])}" for k in sorted(NESTED_ATTRIBUTE_KEYS))
+    nested = f"""flatten(transform(
+        array(named_struct(
+            'b', {skolem_iri("subject", "kv.key")},
+            'm', from_json({repair_pseudo_json("kv.value")}, 'map<string,string>'))),
+        n -> IF(n.m IS NULL,
+            array({_error("kv.key", kind="error")}),
+            concat(
+                array(
+                    {_iri("subject", f"concat({has}, kv.key)", "n.b")},
+                    {_iri("n.b", q(RDF_TYPE), f"map({type_map})[kv.key]")}),
+                transform(map_entries(n.m), e -> {_entry(
+                    "n.b", f"concat({has}, e.key)", "coalesce(e.value, 'None')",
+                    lit=True, dtype=json_value_datatype("e.value"))})))))"""
+    # flattened attributes (dictionary_functions.py:1-18, dispatched per
+    # key at :111-178): a plain one → yelpvoc:{key} literal typed from the
+    # string value. flatten_dictionary keeps a null attributes/hours value
+    # as a plain key → the none list (dictionary_functions.py:11-16 +
+    # create_yelp_nt_files.py:112).
+    nested_keys = ", ".join(map(q, sorted(NESTED_ATTRIBUTE_KEYS)))
+    attributes = f"""IF(attributes IS NULL,
+        array({_error("'attributes'")}),
+        flatten(transform(map_entries(attributes), kv -> CASE
+            WHEN {_is_sentinel("kv.value")} THEN array({_error("kv.key", "kv.value")})
+            WHEN kv.key IN ({nested_keys}) THEN {nested}
+            ELSE array({_entry(
+                "subject", f"concat({q(YELPVOC)}, kv.key)", "kv.value",
+                lit=True, dtype=inferred_datatype("kv.value"))})
+            END)))"""
+    # hours: exempt from flattening (dictionary_functions.py:12), so it
+    # takes the dict path: yelpvoc:hasHours → bnode typed
+    # schema:OpeningHoursSpecification with plain-literal per-day values
+    hours = f"""IF(hours IS NULL,
+        array({_error("'hours'")}),
+        concat(
+            array(
+                {_iri("subject", q(predicate_for("hours")), "hours_bnode")},
+                {_iri("hours_bnode", q(RDF_TYPE), q(TYPE_MAP["hours"]))}),
+            transform(map_entries(hours), kv -> {_entry(
+                "hours_bnode", f"concat({has}, kv.key)", "kv.value", lit=True)})))"""
+    subject = f"concat({q(iri_root('business'))}, business_id)"
+    rows = biz.selectExpr(
+        f"{subject} AS subject", f"{skolem_iri(subject, q('hours'))} AS hours_bnode", "*"
     )
-    keyword_triples = cats.select(
-        "subject",
-        F.lit(SCHEMA + "keywords").alias("predicate"),
-        F.concat(F.lit(YELPCAT), F.col("category")).alias("object"),
-        F.lit(False).alias("is_literal"),
-        _null_str().alias("datatype"),
-        F.lit("business").alias("source_domain"),
-    )
-    cat_type_triples = (
-        cats.select(F.concat(F.lit(YELPCAT), F.col("category")).alias("subject"))
-        .distinct()
-        .select(
-            "subject",
-            F.lit(RDF_TYPE).alias("predicate"),
-            F.lit(YELPVOC + "YelpCategory").alias("object"),
-            F.lit(False).alias("is_literal"),
-            _null_str().alias("datatype"),
-            F.lit("business").alias("source_domain"),
-        )
-    )
-
-    # Branch D+E — flattened attributes (reference flattens the attributes
-    # dict into the top level, dictionary_functions.py:1-18, then dispatches
-    # per key at :111-178).
-    attrs = biz.filter(F.col("attributes").isNotNull()).select(
-        subj.alias("subject"),
-        F.explode(F.map_entries(F.col("attributes"))).alias("kv"),
-    ).select("subject", F.col("kv.key").alias("key"), F.col("kv.value").alias("value"))
-
-    is_nested = F.col("key").isin(*sorted(NESTED_ATTRIBUTE_KEYS))
-    sentinel = _is_sentinel(F.col("value"))
-
-    attr_errors = attrs.filter(sentinel).select(
-        "subject",
-        F.col("key").alias("predicate"),
-        F.col("value").alias("object"),
-        F.lit("none").alias("kind"),
-        F.lit("business").alias("source_domain"),
-    )
-
-    # D: plain attribute → yelpvoc:{key} literal, datatype inferred from the
-    # string value in the reference's order (isdigit → float → string).
-    plain_triples = attrs.filter(~sentinel & ~is_nested).select(
-        "subject",
-        F.concat(F.lit(YELPVOC), F.col("key")).alias("predicate"),
-        F.col("value").alias("object"),
-        F.lit(True).alias("is_literal"),
-        inferred_datatype(F.col("value")).alias("datatype"),
-        F.lit("business").alias("source_domain"),
-    )
-
-    # E: nested pseudo-JSON attribute → skolem blank node subgraph
-    # (create_yelp_nt_files.py:116-137).
-    type_map_expr = F.create_map(
-        *[F.lit(x) for k in sorted(NESTED_ATTRIBUTE_KEYS) for x in (k, TYPE_MAP[k])]
-    )
-    nested = attrs.filter(~sentinel & is_nested).select(
-        "subject",
-        "key",
-        F.from_json(repair_pseudo_json(F.col("value")), "map<string,string>").alias("parsed"),
-        skolem_iri(F.col("subject"), F.col("key")).alias("bnode"),
-    )
-    nested_parsed = nested.filter(F.col("parsed").isNotNull())
-    nested_head = nested_parsed.select(
-        F.col("subject"),
-        F.explode(
-            F.array(
-                F.struct(
-                    F.concat(F.lit(YELPVOC + "has"), F.col("key")).alias("predicate"),
-                    F.col("bnode").alias("object"),
-                ),
-                F.struct(F.lit(RDF_TYPE).alias("predicate"), type_map_expr[F.col("key")].alias("object")),
-            )
-        ).alias("t"),
-        F.col("bnode"),
-    ).select(
-        # first entry hangs off the business subject, second off the bnode
-        F.when(F.col("t.predicate") == RDF_TYPE, F.col("bnode"))
-        .otherwise(F.col("subject"))
-        .alias("subject"),
-        F.col("t.predicate").alias("predicate"),
-        F.col("t.object").alias("object"),
-        F.lit(False).alias("is_literal"),
-        _null_str().alias("datatype"),
-        F.lit("business").alias("source_domain"),
-    )
-    nested_sub = nested_parsed.select(
-        F.col("bnode").alias("subject"),
-        F.explode(F.map_entries(F.col("parsed"))).alias("kv"),
-    ).select(
-        "subject",
-        F.concat(F.lit(YELPVOC + "has"), F.col("kv.key")).alias("predicate"),
-        # JSON null sub-value → rdflib Literal(None) whose lexical form is
-        # the string "None" (plain literal)
-        F.coalesce(F.col("kv.value"), F.lit("None")).alias("object"),
-        F.lit(True).alias("is_literal"),
-        json_value_datatype(F.col("kv.value")).alias("datatype"),
-        F.lit("business").alias("source_domain"),
-    )
-    # A pseudo-JSON value the repair chain cannot save kills the whole record
-    # in the reference (exception at :183); we surface it instead.
-    nested_err = nested.filter(F.col("parsed").isNull()).select(
-        "subject",
-        F.col("key").alias("predicate"),
-        _null_str().alias("object"),
-        F.lit("error").alias("kind"),
-        F.lit("business").alias("source_domain"),
-    )
-
-    # Branch F — hours map: exempt from flattening (dictionary_functions.py:12)
-    # so it takes the dict path: yelpvoc:hasHours → bnode typed
-    # schema:OpeningHoursSpecification with plain-literal per-day values.
-    hrs = biz.filter(F.col("hours").isNotNull()).select(
-        subj.alias("subject"),
-        skolem_iri(subj, F.lit("hours")).alias("bnode"),
-        F.col("hours"),
-    )
-    hours_head = hrs.select(
-        F.col("subject"),
-        F.col("bnode"),
-        F.explode(
-            F.array(
-                F.struct(
-                    F.lit(YELPVOC + "hasHours").alias("predicate"),
-                    F.col("bnode").alias("object"),
-                ),
-                F.struct(
-                    F.lit(RDF_TYPE).alias("predicate"),
-                    F.lit(TYPE_MAP["hours"]).alias("object"),
-                ),
-            )
-        ).alias("t"),
-    ).select(
-        F.when(F.col("t.predicate") == RDF_TYPE, F.col("bnode"))
-        .otherwise(F.col("subject"))
-        .alias("subject"),
-        F.col("t.predicate").alias("predicate"),
-        F.col("t.object").alias("object"),
-        F.lit(False).alias("is_literal"),
-        _null_str().alias("datatype"),
-        F.lit("business").alias("source_domain"),
-    )
-    hours_sub = hrs.select(
-        F.col("bnode").alias("subject"),
-        F.explode(F.map_entries(F.col("hours"))).alias("kv"),
-    ).select(
-        "subject",
-        F.concat(F.lit(YELPVOC + "has"), F.col("kv.key")).alias("predicate"),
-        F.col("kv.value").alias("object"),
-        F.lit(True).alias("is_literal"),
-        _null_str().alias("datatype"),  # Literal(str) → plain literal
-        F.lit("business").alias("source_domain"),
-    )
-
-    triples = (
-        a[0]
-        .unionByName(keyword_triples)
-        .unionByName(cat_type_triples)
-        .unionByName(plain_triples)
-        .unionByName(nested_head)
-        .unionByName(nested_sub)
-        .unionByName(hours_head)
-        .unionByName(hours_sub)
-    )
-    errors = a[1].unionByName(attr_errors).unionByName(nested_err)
-    return triples, errors
+    return _inline(rows, "business", [f"array({', '.join(fixed)})", categories, attributes, hours])
 
 
 # ---------------------------------------------------------------------------
@@ -378,89 +204,26 @@ def business_triples(biz: DataFrame) -> tuple[DataFrame, DataFrame]:
 # ---------------------------------------------------------------------------
 
 
-def user_triples(users: DataFrame) -> tuple[DataFrame, DataFrame]:
-    subj = F.concat(F.lit(iri_root("user")), F.col("user_id"))
-    entries = [
-        _entry(RDF_TYPE, SCHEMA + "Person", lit=False),
-        _entry(SCHEMA + "url", F.concat(F.lit(USER_URI), F.col("user_id")), lit=False),
-        _scalar("name", F.col("name"), SCHEMA + "legalName", XSD_STRING),
-        _scalar("review_count", F.col("review_count"), SCHEMA + "reviewCount", XSD_INTEGER),
-        _scalar(
-            "yelping_since",
-            F.col("yelping_since"),
-            SCHEMA + "dateCreated",
-            XSD_DATETIME,
-            obj=normalize_datetime(F.col("yelping_since")),
-        ),
-        _scalar("useful", F.col("useful"), YELPVOC + "useful", XSD_INTEGER),
-        _scalar("funny", F.col("funny"), YELPVOC + "funny", XSD_INTEGER),
-        _scalar("cool", F.col("cool"), YELPVOC + "cool", XSD_INTEGER),
-        _scalar("fans", F.col("fans"), YELPVOC + "fans", XSD_INTEGER),
-        _scalar("average_stars", F.col("average_stars"), YELPVOC + "average_stars", XSD_DECIMAL),
-        _scalar(
-            "compliment_count",
-            F.col("compliment_count"),
-            YELPVOC + "compliment_count",
-            XSD_INTEGER,
-        ),
-        # friends/elite sentinel routing happens here; expansion below.
-        _entry(None, None, lit=True, valid=~_is_sentinel(F.col("friends")), raw_key="friends", raw_val=F.col("friends")),
-        _entry(None, None, lit=True, valid=~_is_sentinel(F.col("elite")), raw_key="elite", raw_val=F.col("elite")),
+def user_entries(users: DataFrame) -> DataFrame:
+    fixed = [
+        _iri("subject", q(RDF_TYPE), q(TYPE_MAP["user"])),
+        _iri("subject", q(SCHEMA + "url"), f"concat({q(USER_URI)}, user_id)"),
+        *_scalars(schemas.USER, {"user_id", "friends", "elite"}),
     ]
-    # the two routing entries must not emit triples when valid — drop them by
-    # filtering on predicate being non-null for the triple side:
-    x = users.select(subj.alias("subject"), F.explode(F.array(*entries)).alias("t")).select(
-        "subject", "t.*"
-    )
-    a_triples = x.filter(F.col("valid") & F.col("predicate").isNotNull()).select(
-        "subject",
-        "predicate",
-        "object",
-        "is_literal",
-        "datatype",
-        F.lit("user").alias("source_domain"),
-    )
-    a_errors = x.filter(~F.col("valid")).select(
-        "subject",
-        F.col("raw_key").alias("predicate"),
-        F.col("raw_val").alias("object"),
-        F.lit("none").alias("kind"),
-        F.lit("user").alias("source_domain"),
-    )
-
-    # friends: ", "-split → schema:knows IRI edges (:148-152).
-    friends = (
-        users.filter(~_is_sentinel(F.col("friends")))
-        .select(subj.alias("subject"), F.explode(F.split(F.col("friends"), ", ")).alias("fid"))
-        .select(
-            "subject",
-            F.lit(SCHEMA + "knows").alias("predicate"),
-            F.concat(F.lit(YELPENT + "user_id/"), F.col("fid")).alias("object"),
-            F.lit(False).alias("is_literal"),
-            _null_str().alias("datatype"),
-            F.lit("user").alias("source_domain"),
-        )
-    )
+    # friends: ", "-split → schema:knows IRI edges (:148-152)
+    friends = f"""IF({_is_sentinel("friends")},
+        array({_error("'friends'", "friends")}),
+        transform(split(friends, ', '), f -> {_iri(
+            "subject", q(predicate_for("friends")), f"concat({q(iri_root('user'))}, f)")}))"""
     # elite: bare-comma split (:140 — the one key split on "," not ", ");
     # datatype inferred once from the FULL original string (:142 computes
-    # get_schema_predicate on the unsplit value).
-    elite = (
-        users.filter(~_is_sentinel(F.col("elite")))
-        .select(
-            subj.alias("subject"),
-            inferred_datatype(F.col("elite")).alias("datatype"),
-            F.explode(F.split(F.col("elite"), ",")).alias("year"),
-        )
-        .select(
-            "subject",
-            F.lit(YELPVOC + "elite").alias("predicate"),
-            F.col("year").alias("object"),
-            F.lit(True).alias("is_literal"),
-            "datatype",
-            F.lit("user").alias("source_domain"),
-        )
-    )
-    return a_triples.unionByName(friends).unionByName(elite), a_errors
+    # get_schema_predicate on the unsplit value)
+    elite = f"""IF({_is_sentinel("elite")},
+        array({_error("'elite'", "elite")}),
+        transform(split(elite, ','), y -> {_entry(
+            "subject", q(predicate_for("elite")), "y", lit=True, dtype=inferred_datatype("elite"))}))"""
+    rows = users.selectExpr(f"concat({q(iri_root('user'))}, user_id) AS subject", "*")
+    return _inline(rows, "user", [f"array({', '.join(fixed)})", friends, elite])
 
 
 # ---------------------------------------------------------------------------
@@ -468,69 +231,31 @@ def user_triples(users: DataFrame) -> tuple[DataFrame, DataFrame]:
 # ---------------------------------------------------------------------------
 
 
-def review_triples(reviews: DataFrame) -> tuple[DataFrame, DataFrame]:
-    subj = F.concat(F.lit(iri_root("review")), F.col("review_id"))
-    entries = [
-        _entry(RDF_TYPE, SCHEMA + "UserReview", lit=False),
+def review_entries(reviews: DataFrame) -> DataFrame:
+    fixed = [
+        _iri("subject", q(RDF_TYPE), q(TYPE_MAP["review"])),
         # review url: https://www.yelp.com/biz/{business_id}?hrid={review_id} (:56,69-71)
-        _entry(
-            SCHEMA + "url",
-            F.concat(F.lit(BUSINESS_URI), F.col("business_id"), F.lit("?hrid="), F.col("review_id")),
-            lit=False,
+        _iri(
+            "subject",
+            q(SCHEMA + "url"),
+            f"concat({q(BUSINESS_URI)}, business_id, '?hrid=', review_id)",
         ),
         # author edge added before the generic loop (:76-81)
-        _entry(
-            SCHEMA + "author",
-            F.concat(F.lit(YELPENT + "user_id/"), F.col("user_id")),
-            lit=False,
-        ),
+        _iri("subject", q(SCHEMA + "author"), f"concat({q(iri_root('user'))}, user_id)"),
         # business link is an IRI for reviews (:160-166)
-        _entry(
-            SCHEMA + "about",
-            F.concat(F.lit(YELPENT + "business_id/"), F.col("business_id")),
-            lit=False,
-            valid=F.col("business_id").isNotNull(),
-            raw_key="business_id",
-        ),
-        _scalar("stars", F.col("stars"), SCHEMA + "aggregateRating", XSD_DECIMAL),
-        _scalar("useful", F.col("useful"), YELPVOC + "useful", XSD_INTEGER),
-        _scalar("funny", F.col("funny"), YELPVOC + "funny", XSD_INTEGER),
-        _scalar("cool", F.col("cool"), YELPVOC + "cool", XSD_INTEGER),
-        _scalar("text", F.col("text"), SCHEMA + "description", XSD_STRING),
-        _entry(None, None, lit=True, valid=~_is_sentinel(F.col("date")), raw_key="date", raw_val=F.col("date")),
+        f"""IF(business_id IS NULL, {_error("'business_id'")}, {_iri(
+            "subject", q(predicate_for("business_id")),
+            f"concat({q(iri_root('business'))}, business_id)")})""",
+        *_scalars(schemas.REVIEW, {"review_id", "user_id", "business_id", "date"}),
     ]
-    x = reviews.select(subj.alias("subject"), F.explode(F.array(*entries)).alias("t")).select(
-        "subject", "t.*"
-    )
-    a_triples = x.filter(F.col("valid") & F.col("predicate").isNotNull()).select(
-        "subject",
-        "predicate",
-        "object",
-        "is_literal",
-        "datatype",
-        F.lit("review").alias("source_domain"),
-    )
-    a_errors = x.filter(~F.col("valid")).select(
-        "subject",
-        F.col("raw_key").alias("predicate"),
-        F.col("raw_val").alias("object"),
-        F.lit("none").alias("kind"),
-        F.lit("review").alias("source_domain"),
-    )
-    # 'date' goes through the list branch (:139-157): ", "-split, space→T.
-    dates = (
-        reviews.filter(~_is_sentinel(F.col("date")))
-        .select(subj.alias("subject"), F.explode(F.split(F.col("date"), ", ")).alias("d"))
-        .select(
-            "subject",
-            F.lit(SCHEMA + "dateCreated").alias("predicate"),
-            normalize_datetime(F.col("d")).alias("object"),
-            F.lit(True).alias("is_literal"),
-            F.lit(XSD_DATETIME).alias("datatype"),
-            F.lit("review").alias("source_domain"),
-        )
-    )
-    return a_triples.unionByName(dates), a_errors
+    # 'date' goes through the list branch (:139-157): ", "-split, space→T
+    dates = f"""IF({_is_sentinel("date")},
+        array({_error("'date'", "date")}),
+        transform(split(date, ', '), d -> {_entry(
+            "subject", q(predicate_for("date")), normalize_datetime("d"),
+            lit=True, dtype=q(datatype_for("date")))}))"""
+    rows = reviews.selectExpr(f"concat({q(iri_root('review'))}, review_id) AS subject", "*")
+    return _inline(rows, "review", [f"array({', '.join(fixed)})", dates])
 
 
 # ---------------------------------------------------------------------------
@@ -540,35 +265,20 @@ def review_triples(reviews: DataFrame) -> tuple[DataFrame, DataFrame]:
 # ---------------------------------------------------------------------------
 
 
-def tip_triples(tips: DataFrame) -> tuple[DataFrame, DataFrame]:
+def tip_entries(tips: DataFrame) -> DataFrame:
+    entries = [
+        _iri("subject", q(SCHEMA + "author"), f"concat({q(iri_root('user'))}, user_id)"),
+        _iri("subject", q(RDF_TYPE), q(YELPVOC + "Tip")),
+    ]
+    for key in ("business_id", "text", "date", "compliment_count"):
+        pred, obj, dtype = _value(schemas.TIP, key)
+        if key == "business_id":  # Literal(obj, datatype=anyURI) at :294-296
+            obj = f"concat({q(iri_root('business'))}, business_id)"
+        entries.append(_entry("subject", pred, obj, lit=True, dtype=dtype))
     # a tip has no natural key; the skolem uses the page url so duplicate tip
     # content keeps reference multiplicity (one bnode per input row).
-    bnode = skolem_iri(F.lit("tip"), F.col("url"))
-    entries = [
-        _entry(SCHEMA + "author", F.concat(F.lit(YELPENT + "user_id/"), F.col("user_id")), lit=False),
-        _entry(RDF_TYPE, YELPVOC + "Tip", lit=False),
-        _entry(
-            SCHEMA + "about",
-            F.concat(F.lit(YELPENT + "business_id/"), F.col("business_id")),
-            lit=True,  # Literal(obj, datatype=anyURI) at :294-296
-            dtype=XSD_ANYURI,
-        ),
-        _entry(SCHEMA + "description", F.col("text"), lit=True, dtype=XSD_STRING),
-        _entry(
-            SCHEMA + "dateCreated",
-            normalize_datetime(F.col("date")),
-            lit=True,
-            dtype=XSD_DATETIME,
-        ),
-        _entry(
-            YELPVOC + "compliment_count",
-            F.col("compliment_count"),
-            lit=True,
-            dtype=XSD_INTEGER,
-        ),
-    ]
-    t, e = _explode_entries(tips, bnode, entries, "tip")
-    return t, e
+    rows = tips.selectExpr(f"{skolem_iri(q('tip'), 'url')} AS subject", "*")
+    return _inline(rows, "tip", [f"array({', '.join(entries)})"])
 
 
 # ---------------------------------------------------------------------------
@@ -577,47 +287,64 @@ def tip_triples(tips: DataFrame) -> tuple[DataFrame, DataFrame]:
 # ---------------------------------------------------------------------------
 
 
-def checkin_triples(checkins: DataFrame) -> tuple[DataFrame, DataFrame]:
-    counted = (
-        checkins.filter(F.col("date").isNotNull() & (F.col("date") != ""))
-        .select(
-            F.col("business_id"),
-            F.explode(F.split(F.col("date"), ", ")).alias("d"),
-        )
-        .select("business_id", normalize_datetime(F.col("d")).alias("d"))
-        # Counter(dates) per row ≡ global count per (business, date) since a
-        # business appears on exactly one checkin line (:215-225).
-        .groupBy("business_id", "d")
-        .count()
+def checkin_entries(checkins: DataFrame) -> DataFrame:
+    # Counter(dates) of ONE record (:215-225), per row: sort the record's
+    # normalized dates; each run of equal dates is one (date, count) pair,
+    # its count the distance to the next run's start.
+    dates = checkins.where("date IS NOT NULL AND date != ''").selectExpr(
+        "business_id",
+        f"array_sort(transform(split(date, ', '), d -> {normalize_datetime('d')})) AS ds",
     )
-    base = counted.select(
-        F.concat(F.lit(iri_root("checkin")), F.col("business_id")).alias("business_iri"),
-        skolem_iri(F.lit("checkin"), F.col("business_id"), F.col("d")).alias("bnode"),
-        F.col("d"),
-        F.col("count"),
+    runs = dates.selectExpr(
+        "business_id",
+        "ds",
+        "filter(sequence(0, size(ds) - 1), i -> i = 0 OR ds[i] != get(ds, i - 1)) AS starts",
     )
-    entries = [
-        _entry(SCHEMA + "object", F.col("business_iri"), lit=False),
-        _entry(RDF_TYPE, SCHEMA + "ArriveAction", lit=False),
-        _entry(SCHEMA + "startTime", F.col("d"), lit=True, dtype=XSD_DATETIME),
-        _entry(SCHEMA + "interactionStatistic", F.col("count"), lit=True, dtype=XSD_INTEGER),
-    ]
-    return _explode_entries(base, F.col("bnode"), entries, "checkin")
+    business = f"concat({q(iri_root('checkin'))}, business_id)"
+    cell = f"""flatten(transform(
+        transform(starts, (p, j) -> named_struct(
+            'b', {skolem_iri(q('checkin'), 'business_id', 'ds[p]')},
+            'd', ds[p],
+            'n', coalesce(get(starts, j + 1), size(ds)) - p)),
+        c -> array(
+            {_iri("c.b", q(SCHEMA + "object"), business)},
+            {_iri("c.b", q(RDF_TYPE), q(SCHEMA + "ArriveAction"))},
+            {_entry("c.b", q(SCHEMA + "startTime"), "c.d", lit=True, dtype=q(XSD_DATETIME))},
+            {_entry("c.b", q(SCHEMA + "interactionStatistic"), "CAST(c.n AS STRING)",
+                    lit=True, dtype=q(XSD_INTEGER))})))"""
+    return _inline(runs, "checkin", [cell])
 
 
 # ---------------------------------------------------------------------------
 # glue
 # ---------------------------------------------------------------------------
 
-EMITTERS = {
-    "business": business_triples,
-    "user": user_triples,
-    "review": review_triples,
-    "tip": tip_triples,
-    "checkin": checkin_triples,
+ENTRIES = {
+    "business": business_entries,
+    "user": user_entries,
+    "review": review_entries,
+    "tip": tip_entries,
+    "checkin": checkin_entries,
 }
+# the domains whose reference path routes values to the none list; tip and
+# checkin emit every value (create_tip_nt_file, create_checkin_nt_file)
+_ROUTED = {"business", "user", "review"}
+
+
+def _union(a: DataFrame, b: DataFrame) -> DataFrame:
+    return a.union(b)
 
 
 def emit_all(records: dict[str, DataFrame]) -> tuple[DataFrame, DataFrame]:
-    """Union of all domain emissions present in ``records``."""
-    return _union_pairs(EMITTERS[d](df) for d, df in records.items())
+    """(triples, errors) of all domains present in ``records``: the union of
+    their entry rows, split on ``kind``."""
+    entries = {domain: ENTRIES[domain](df) for domain, df in records.items()}
+    routed = [x for domain, x in entries.items() if domain in _ROUTED]
+    rest = [x for domain, x in entries.items() if domain not in _ROUTED]
+    # the routed union is built once and reused inside ``every``
+    routed = [reduce(_union, routed)] if routed else []
+    every = reduce(_union, routed + rest)
+    # no routing domain present: an empty errors branch, pruned from the plan
+    errors = routed[0] if routed else every.where("false")
+    triples = every.where("kind IS NULL").selectExpr(*TRIPLE_COLS)
+    return triples, errors.where("kind IS NOT NULL").selectExpr(*ERROR_COLS)

@@ -113,21 +113,19 @@ def parse_records(
     pre-extracted ``text`` column is trusted (both paths are byte-identical
     on well-formed corpora — asserted by tests/test_extract.py).
 
-    The triple emission downstream is a union of ~12 projection branches
-    over these records, so the post-extraction classified frame needs a
-    stage cut — without one every branch re-runs the extraction UDF.
+    Emission reads each domain frame in one Generate branch per output
+    (triples, errors), so the five domain parses share the classified
+    frame, which needs a stage cut — without one every domain branch
+    re-runs the extraction UDF. The cut is the only one: each domain's
+    ``from_json`` then runs once per consuming action, which costs less
+    than writing and re-reading five parsed frames.
 
-    The cut sits AFTER the typed ``from_json`` parse, not on the raw
-    classified text: emission fans out into ~12 triple-family branches and
-    a pre-parse cut re-runs the (expensive) JSON parse in every branch —
-    measured ~3× more CPU on the emission stage. With the post-parse cut
-    the extraction UDF and each domain's parse run exactly once per build.
-
-    ``scratch_dir`` (preferred at scale): materialize the parsed domain
-    frames to parquet and re-read them. Columnar, splittable,
-    contention-free — the production two-stage pipeline (extracted-records
-    table between extraction and emission). Block-manager ``persist`` is the
-    fallback (``cache=True`` / a ``StorageLevel`` attr name string).
+    ``scratch_dir`` (preferred at scale): materialize the classified frame
+    to parquet and re-read it. Columnar, splittable, contention-free — the
+    production two-stage pipeline (extracted-records table between
+    extraction and emission). Block-manager ``persist`` is the fallback
+    (``cache=True`` / a ``StorageLevel`` attr name string); the persisted
+    frame is appended to ``persisted_out`` so the caller can release it.
     """
     pages = pages.filter(F.col("lang") == lang)
     if use_extraction:
@@ -143,12 +141,10 @@ def parse_records(
         text_col.alias("record_text"),
         classify_domain(text_col).alias("domain"),
     )
-    spark = classified.sparkSession
     if scratch_dir:
-        # interim cut so the five domain parses share one extraction pass
         cpath = f"{scratch_dir}/classified.parquet"
         classified.write.mode("overwrite").parquet(cpath)
-        classified = spark.read.parquet(cpath)
+        classified = classified.sparkSession.read.parquet(cpath)
     elif cache:
         from pyspark import StorageLevel
 
@@ -156,29 +152,17 @@ def parse_records(
         # in-heap memory-store pressure that a 10×-bigger corpus would put on
         # the executor heap; page cache makes re-reads near-memory-speed.
         level = getattr(StorageLevel, cache) if isinstance(cache, str) else StorageLevel.DISK_ONLY
-        # interim cut so the five domain parses share one extraction pass
         classified = classified.persist(level)
         if persisted_out is not None:
             persisted_out.append(classified)
 
-    out: dict[str, DataFrame] = {}
-    for domain in DOMAINS:
-        parsed = (
-            classified.filter(F.col("domain") == domain)
-            .select(
-                "url",
-                "warc_ts",
-                F.from_json(F.col("record_text"), _RECORD_SCHEMAS[domain]).alias("r"),
-            )
-            .select("url", "warc_ts", "r.*")
+    return {
+        domain: classified.where(f"domain = '{domain}'")
+        .selectExpr(
+            "url",
+            "warc_ts",
+            f"from_json(record_text, '{_RECORD_SCHEMAS[domain].simpleString()}') AS r",
         )
-        if scratch_dir:
-            path = f"{scratch_dir}/parsed_{domain}.parquet"
-            parsed.write.mode("overwrite").parquet(path)
-            parsed = spark.read.parquet(path)
-        elif cache:
-            parsed = parsed.persist(level)
-            if persisted_out is not None:
-                persisted_out.append(parsed)
-        out[domain] = parsed
-    return out
+        .selectExpr("url", "warc_ts", "r.*")
+        for domain in DOMAINS
+    }

@@ -59,10 +59,9 @@ def start_incremental_build(
     pages = read_web_pages_stream(spark, source_dir)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # persist the parsed domain frames: emit_all fans out into ~12
-        # branches and two actions follow — without the stage cut the
-        # extraction UDF and per-domain parses re-run per branch per action
-        # (the exact multi-pass cost the batch path was measured to avoid)
+        # persist the classified frame (parse_records' one stage cut):
+        # emit_all reads it in one branch per domain and two writes follow —
+        # without the cut the extraction UDF re-runs per branch per write
         persisted: list[DataFrame] = []
         records = parse_records(
             batch_df, use_extraction=use_extraction, persisted_out=persisted
